@@ -3,9 +3,10 @@
 Reads the JSON-lines log that ``spark.eventLog.enabled`` writes (epoch-ms
 timestamps) and attributes jobs and stages to the benchmark's labels:
 every engine call the benchmark makes runs under ``setJobGroup(label)``.
-Jobs without a label, such as those of the background compaction
-thread, are attributed by their Python call site (``callSite.short``,
-e.g. ``collect at .../cdc/table.py:1990``).
+Jobs without a label, such as those of the engine's background
+compaction thread, are attributed by their Python call site
+(``callSite.short``, e.g. ``collect at .../cdc/table.py:1990``) when the
+log has one, else counted as ``unlabelled``.
 
 Times are seconds. "In-job" time of a call is the length of the union
 of its jobs' [submission, completion] intervals; the rest of the call's
@@ -39,6 +40,7 @@ class Stage:
     tasks: list[float] = field(default_factory=list)  # task durations
     shuffle_write: int = 0
     spill: int = 0
+    scan: bool = False  # reads files (a FileScanRDD among its RDDs)
 
 
 @dataclass
@@ -93,6 +95,10 @@ def load(path: str) -> Log:
                 for a in info.get("Accumulables", []):
                     if a.get("Metadata") == "sql":
                         log.accum[a["ID"]] = log.accum.get(a["ID"], 0.0) + float(a["Update"])
+            elif kind == "SparkListenerStageCompleted":
+                info = e["Stage Info"]
+                st = log.stages.setdefault(info["Stage ID"], Stage(info["Stage ID"]))
+                st.scan = any("FileScanRDD" in (r.get("Name") or "") for r in info.get("RDD Info", []))
             elif kind in (_SQL + "SparkListenerSQLExecutionStart",
                           _SQL + "SparkListenerSQLAdaptiveExecutionUpdate"):
                 _walk_plan(log, e["executionId"], e["sparkPlanInfo"])
@@ -119,13 +125,12 @@ def union_s(intervals: list[tuple[float, float]]) -> float:
 
 def owner(job: Job) -> str:
     """The label a job ran under, else the file its Python call site
-    names (``site:table.py`` for compaction), else ``spark`` for jobs
-    Spark starts itself."""
+    names (``site:table.py``), else ``unlabelled``."""
     if job.group:
         return job.group
     if job.site and " at " in job.site:
         return "site:" + os.path.basename(job.site.split(" at ", 1)[1].rsplit(":", 1)[0])
-    return "spark"
+    return "unlabelled"
 
 
 def skew(stage: Stage) -> float:
@@ -145,8 +150,8 @@ def _node_metric_s(log: Log, executions: set[int], node: str, metric: str) -> fl
 
 def attribute(log: Log, calls: list[dict]) -> dict:
     """Per-batch figures for ``apply_batch`` calls. Each call carries its
-    ``label``, wall ``start``/``end`` and ``BatchMetrics`` (whose phase
-    split locates the write phase in time)."""
+    ``label``, wall ``start``/``end`` and ``BatchMetrics`` as a dict
+    (whose phase split locates the write phase in time)."""
     by_group: dict[str, list[Job]] = {}
     for j in log.jobs.values():
         by_group.setdefault(j.group or "", []).append(j)
@@ -168,7 +173,7 @@ def attribute(log: Log, calls: list[dict]) -> dict:
                 if st is not None:
                     shuffle += st.shuffle_write
                     spill += st.spill
-        ph = c["m"].phases or {}
+        ph = c["m"]["phases"] or {}
         w0 = c["start"] + sum(ph.get(p, 0.0) for p in ("spool", "stats", "census"))
         w1 = w0 + ph.get("write", 0.0)
         write_stages = [
@@ -201,6 +206,19 @@ def spans(log: Log, spans: list[tuple[str, float, float]]) -> dict:
         jobs_n.append(len(jobs))
         driver.append(max(0.0, (t1 - t0) - union_s([(j.start, j.end) for j in jobs])))
     return {"jobs_per_span": statistics.mean(jobs_n), "driver_s_p50": statistics.median(driver)}
+
+
+def spans_stages(log: Log, spans: list[tuple[str, float, float]]) -> dict:
+    """Stage shape of labelled bench calls, e.g. analytic queries: scan
+    stages that ran on at most 2 tasks (parallelism-starved reads), and
+    the largest task skew of any stage with at least 2 tasks."""
+    groups = {label for label, _, _ in spans}
+    stages = [log.stages[sid] for j in log.jobs.values() if j.group in groups
+              for sid in j.stages if sid in log.stages and log.stages[sid].tasks]
+    return {
+        "small_scan_stages": sum(1 for st in stages if st.scan and len(st.tasks) <= 2),
+        "stage_skew_max": max([skew(st) for st in stages if len(st.tasks) >= 2] or [1.0]),
+    }
 
 
 def owners(log: Log, since: float = 0.0) -> dict[str, tuple[int, float]]:

@@ -10,14 +10,13 @@ the engine's code.
 
 Comparisons are order-insensitive digests: ``(rows, sum of md5 word 0,
 sum of md5 word 1)`` over one ``|``-joined string per row, computed the
-same way on both sides.
+same way on both sides. Analytic query results are compared as frames
+(``frame_mismatch``), like ``tests/oracle_util.py`` compares them.
 """
 
 from __future__ import annotations
 
 import calendar
-
-import duckdb
 
 NULL = "\\N"
 TEXT_COLS = ["conv_id", "turn_idx", "text"]
@@ -48,6 +47,8 @@ class Oracle:
     """Expected table states for sets of WAL chunk files."""
 
     def __init__(self) -> None:
+        import duckdb  # not at module level: the measured process imports this module
+
         self.con = duckdb.connect()
         self.con.execute("SET threads TO 2")
         self.con.execute(_CANON)
@@ -155,3 +156,37 @@ def spark_rows(rows) -> list[tuple]:
             for c in FULL_COLS
         ))
     return sorted(out)
+
+
+def _normalize(df):
+    """Columns by name, rows by value; floats to 9 places, other
+    non-integer columns as strings."""
+    df = df[sorted(df.columns)].copy()
+    for c in df.columns:
+        kind = str(df[c].dtype)
+        if kind.startswith("float"):
+            df[c] = df[c].round(9)
+        elif kind == "object" or kind.startswith("datetime"):
+            df[c] = df[c].astype(str)
+        else:
+            try:
+                df[c] = df[c].astype("int64")
+            except (TypeError, ValueError):
+                df[c] = df[c].astype(str)
+    return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+
+def frame_mismatch(got, want) -> str | None:
+    """None when two pandas frames hold the same rows (order-insensitive),
+    else what differs."""
+    g, w = _normalize(got), _normalize(want)
+    if list(g.columns) != list(w.columns):
+        return f"columns {list(g.columns)} != {list(w.columns)}"
+    if len(g) != len(w):
+        return f"{len(g)} rows != {len(w)}"
+    for c in g.columns:
+        a, b = g[c], w[c]
+        same = ((a - b).abs().le(1e-9) | (a.isna() & b.isna())) if str(a.dtype).startswith("float") else a.eq(b)
+        if not bool(same.all()):
+            return f"column {c} differs"
+    return None

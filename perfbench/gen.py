@@ -7,8 +7,11 @@ when the engine changes. Output rows follow the WAL envelope
 parquet chunk files written here.
 
 One log per (workload, seed), cut in stream order into
-- ``bulk``: the catch-up part, replayed in a few large micro-batches;
+- ``bulk``: the catch-up part, applied in a few large micro-batches;
 - ``tail``: the trickle part, published chunk by chunk on a schedule.
+
+``write_tables`` makes seeded stand-ins for the tables the analytic
+queries read, in the schemas of the sf test tables (TESTDATA.md).
 
 Mix: ~60% insert, ~30% update, ~8% delete, 2% re-delivered duplicates
 (same lsn and content, later in the stream), one ``schema_change`` half
@@ -35,6 +38,10 @@ VOCAB = (
     "query state commit offset snapshot replay skew salt bucket kernel cache "
     "index vector token schema delta"
 ).split()
+UPDATE_FRAC = 0.5  # updates per inserted key
+DELETE_FRAC = 0.133  # share of keys deleted at the end of their chain
+REDELIVER_FRAC = 0.02
+N_SOURCE_PARTS = 4
 DDL_PAYLOAD = json.dumps({"add_columns": {"tool_name": "string", "tool_latency_ms": "long"}})
 
 ENVELOPE = pa.schema(
@@ -58,10 +65,6 @@ class LogSpec:
     hot_convs: int  # conversations conv-00000000.. that receive extra updates
     hot_updates: int  # extra update events per hot conversation
     bulk_events: int  # the rest of the log is the trickle tail
-    update_frac: float = 0.5  # updates per inserted key
-    delete_frac: float = 0.133  # share of keys deleted at the end of their chain
-    redeliver_frac: float = 0.02
-    n_source_parts: int = 4
 
 
 def _texts(rng: np.random.Generator, version: np.ndarray) -> list[str]:
@@ -92,11 +95,11 @@ def generate(seed: int, spec: LogSpec) -> pa.Table:
     key_turn = np.arange(len(key_conv)) - np.repeat(starts, n_turns)
     n_keys = len(key_conv)
 
-    upd = [rng.integers(0, n_keys, int(spec.update_frac * n_keys))]
+    upd = [rng.integers(0, n_keys, int(UPDATE_FRAC * n_keys))]
     for c in range(spec.hot_convs):
         upd.append(starts[c] + rng.integers(0, n_turns[c], spec.hot_updates))
     upd_keys = np.concatenate(upd)
-    del_keys = np.flatnonzero(rng.random(n_keys) < spec.delete_frac)
+    del_keys = np.flatnonzero(rng.random(n_keys) < DELETE_FRAC)
     ev_key = np.concatenate([np.arange(n_keys), upd_keys, del_keys])
     # chain position: insert < updates < delete within a key
     seq = np.concatenate(
@@ -153,7 +156,7 @@ def generate(seed: int, spec: LogSpec) -> pa.Table:
 
     pos = np.arange(n, dtype=np.float64)
     # re-delivered duplicates: copies of earlier events, later in stream
-    n_dup = int(n * spec.redeliver_frac)
+    n_dup = int(n * REDELIVER_FRAC)
     dup_idx = rng.choice(n, size=n_dup, replace=False)
     dup_pos = dup_idx + rng.uniform(1.0, n - dup_idx)
     src = np.concatenate([np.arange(n), dup_idx])
@@ -172,7 +175,7 @@ def generate(seed: int, spec: LogSpec) -> pa.Table:
         "turn_idx": pa.array(turn_of_ev[s].astype(np.int32), mask=is_ddl),
         "payload": [DDL_PAYLOAD if d else payloads[j] for d, j in zip(is_ddl.tolist(), s.tolist())],
         "schema_ver": np.where(is_ddl | (lsn_col > ddl_lsn), 2, 1).astype(np.int32),
-        "source_part": np.where(is_ddl, 0, conv_of_ev[s] % spec.n_source_parts).astype(np.int32),
+        "source_part": np.where(is_ddl, 0, conv_of_ev[s] % N_SOURCE_PARTS).astype(np.int32),
     }
     return pa.table(cols, schema=ENVELOPE)
 
@@ -190,3 +193,85 @@ def write_chunks(log: pa.Table, out_dir: str, n_chunks: int, mtime_base: int) ->
         os.utime(path, (mtime_base + i, mtime_base + i))
         paths.append(path)
     return paths
+
+
+DOC_WORDS = (
+    "the a fast slow big small key value row column table scan join merge sort hash group "
+    "agg filter window order part line customer query data spark stream batch vector"
+).split()
+
+
+def write_tables(seed: int, out_dir: str) -> None:
+    """``events``, ``orders``, ``lineitem``, ``part`` and ``documents``
+    parquet files in the schemas of the sf test tables (about sf0.01
+    row counts, ``documents`` larger), drawn from ``seed``."""
+    rng = np.random.default_rng(seed)
+    os.makedirs(out_dir, exist_ok=True)
+
+    def save(name: str, cols: dict) -> None:
+        pq.write_table(pa.table(cols), os.path.join(out_dir, f"{name}.parquet"))
+
+    def days(lo: str, hi: str, n: int) -> np.ndarray:
+        d0, d1 = np.datetime64(lo, "D"), np.datetime64(hi, "D")
+        return (d0 + rng.integers(0, (d1 - d0).astype(int) + 1, n)).astype("datetime64[us]")
+
+    def money(lo: float, hi: float, n: int) -> np.ndarray:
+        return np.round(rng.uniform(lo, hi, n), 2)
+
+    n = 20_000
+    ts = np.datetime64("2024-01-01", "us") + np.sort(rng.integers(0, 30 * 86_400 * 10**6, n)).astype(
+        "timedelta64[us]")
+    save("events", {
+        "event_id": np.arange(n, dtype=np.int64),
+        "ts": ts,
+        "user_id": rng.integers(0, 150, n),
+        "event_type": np.asarray(["click", "view", "purchase", "signup", "error"])[rng.integers(0, 5, n)],
+        "value": money(0, 490, n),
+        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n).tolist()],
+    })
+    n_orders, n_parts = 15_000, 2_000
+    save("orders", {
+        "o_orderkey": np.arange(n_orders, dtype=np.int64),
+        "o_custkey": rng.integers(0, 1_500, n_orders),
+        "o_orderstatus": np.asarray(["F", "O", "P"])[rng.integers(0, 3, n_orders)],
+        "o_totalprice": money(1_000, 500_000, n_orders),
+        "o_orderdate": days("1995-01-01", "2001-08-01", n_orders),
+        "o_orderpriority": np.asarray(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"])[
+            rng.integers(0, 5, n_orders)],
+    })
+    n = 60_000
+    save("lineitem", {
+        "l_orderkey": rng.integers(0, n_orders, n),
+        "l_partkey": rng.integers(0, n_parts, n),
+        "l_suppkey": rng.integers(0, 100, n),
+        "l_linenumber": rng.integers(1, 8, n).astype(np.int32),
+        "l_quantity": rng.integers(1, 51, n).astype(np.float64),
+        "l_extendedprice": money(900, 105_000, n),
+        "l_discount": rng.integers(0, 11, n) / 100.0,
+        "l_tax": rng.integers(0, 9, n) / 100.0,
+        "l_returnflag": np.asarray(["A", "N", "R"])[rng.integers(0, 3, n)],
+        "l_linestatus": np.asarray(["F", "O"])[rng.integers(0, 2, n)],
+        "l_shipdate": days("1995-01-02", "2001-11-04", n),
+    })
+    kinds = np.asarray(["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"])
+    metals = np.asarray(["BRASS", "COPPER", "STEEL", "TIN", "NICKEL"])
+    save("part", {
+        "p_partkey": np.arange(n_parts, dtype=np.int64),
+        "p_name": [f"{a} {b}" for a, b in zip(np.asarray(DOC_WORDS)[rng.integers(0, len(DOC_WORDS), n_parts)],
+                                               np.asarray(DOC_WORDS)[rng.integers(0, len(DOC_WORDS), n_parts)])],
+        "p_brand": [f"Brand#{b}" for b in rng.integers(11, 36, n_parts).tolist()],
+        "p_type": np.char.add(np.char.add(kinds[rng.integers(0, len(kinds), n_parts)], " "),
+                              metals[rng.integers(0, len(metals), n_parts)]),
+        "p_size": rng.integers(1, 51, n_parts).astype(np.int32),
+        "p_retailprice": np.round(900 + rng.integers(0, 1000, n_parts) / 10.0, 2),
+    })
+    n = 2_000
+    words = np.asarray(DOC_WORDS)
+    texts = [" ".join(words[rng.integers(0, len(words), k)]) for k in rng.integers(8, 100, n).tolist()]
+    save("documents", {
+        "doc_id": np.arange(n, dtype=np.int64),
+        "text": texts,
+        "lang": np.asarray(["en", "en", "en", "de", "fr", "es", "zh"])[rng.integers(0, 7, n)],
+        "source": [f"src{s}" for s in rng.integers(0, 20, n).tolist()],
+        "n_chars": np.asarray([len(t) for t in texts], dtype=np.int64),
+    })

@@ -1,28 +1,16 @@
 #!/usr/bin/env python3
-"""CDC engine benchmark: bulk replay, trickle freshness and merge-on-read
-serving, at ``local[nproc]`` in one process.
+"""CDC engine benchmark: bulk replay, merge-on-read serving, trickle
+freshness and analytic queries, at ``local[nproc]``.
 
     python3 perfbench/run.py --workload skewed --seed 1 --seconds 10 --trace 0
 
-Each run generates its WAL from ``--seed`` (cached under
-``.perfbench_work/``), replays a small untimed warm-up log so that JIT,
-codegen and the Python workers are warm, then runs three phases:
-
-1. bulk: one replay of the bulk WAL (fixed work) into a fresh table
-   through ``readStream -> foreachBatch(apply_batch)`` in 2 large
-   micro-batches (availableNow), checked against the oracle.
-2. serving: for 0.3 x ``--seconds`` and at least one round, one client
-   in a closed loop over the bulk table: seeded rounds of ``read_key``
-   lookups, a full ``read_final`` scan through a full-width checksum,
-   ``read_changes`` since the first bulk commit and a time-travel
-   ``read_final(version=...)``. Every result is checked against the
-   oracle.
-3. trickle: an open loop on the same table. For 0.7 x ``--seconds`` a
-   publisher thread moves the tail chunks into a watched directory on a
-   fixed schedule (``TRICKLE_RATE`` events/s, increasing mtimes) while a
-   stream with the default trigger applies them. Freshness of a chunk
-   runs from its scheduled publish time to the return of the
-   ``apply_batch`` call whose ``lsn_max`` covers it.
+This process makes the inputs from ``--seed`` (a WAL and the analytic
+tables, cached under ``.perfbench_work/``) and the oracle's expected
+results, then starts ``measure.py``, the measured process, which runs the
+engine in one Spark session (see its docstring for the phases). When that
+process has ended, this one checks the results that need the oracle
+(``read_changes`` rows, query results), and with ``--trace 1`` parses
+Spark's event log.
 
 The last stdout line is the result JSON (``correct``, ``attempted``,
 ``failed``, ``metrics``); the line before it records host and session.
@@ -42,10 +30,10 @@ import math
 import os
 import random
 import shutil
+import signal
 import statistics
 import subprocess
 import sys
-import threading
 import time
 
 T_START = time.time()
@@ -53,29 +41,46 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench_work")
 ENGINE = "audience_behavior_semantic_etl_spark"
+DEADLINE_S = 175  # the whole run, inputs included
 
 sys.path.insert(0, ROOT)
 
-from perfbench.gen import LogSpec, generate, write_chunks  # noqa: E402
+from perfbench.gen import LogSpec  # noqa: E402
 
-# Inputs. The bulk part is 2 micro-batches of 30k events; the skewed
-# workload's 4 hot conversations carry ~1.9k events each per bulk batch,
-# above ApplyConfig.hot_key_threshold (1000), so the salted path runs.
-# The uniform workload has no hot conversation, so it never does.
+# Inputs. The WAL is cut in stream order into
+# - bulk: 24k events in 9 chunks, applied to a fresh table in 3
+#   micro-batches of 8k. The first is the set-up's warm-up (JIT, codegen,
+#   Python workers); the other two are timed. The skewed workload's 2 hot
+#   conversations carry ~1.1k events each per batch, above
+#   ApplyConfig.hot_key_threshold (1000), so the salted path runs; the
+#   uniform workload has no hot conversation, so it never does;
+# - tail: the rest, ~12k events, published chunk by chunk by the trickle
+#   (which uses the first ~3k).
 WORKLOADS = {
-    "skewed": LogSpec(n_convs=2900, mean_turns=12, hot_convs=4, hot_updates=5000, bulk_events=60_000),
-    "uniform": LogSpec(n_convs=3950, mean_turns=12, hot_convs=0, hot_updates=0, bulk_events=60_000),
+    "skewed": LogSpec(n_convs=1310, mean_turns=12, hot_convs=2, hot_updates=5000, bulk_events=24_000),
+    "uniform": LogSpec(n_convs=1830, mean_turns=12, hot_convs=0, hot_updates=0, bulk_events=24_000),
 }
-BULK_CHUNKS = 30
-BULK_BATCHES = 2
-TAIL_CHUNK_EVENTS = 425
-WARM = LogSpec(n_convs=400, mean_turns=12, hot_convs=1, hot_updates=2000, bulk_events=8_000)
-# Offered rate of the trickle phase: about a quarter of the bulk
-# phase's throughput at local[4] (~6.6k events/s), fixed so every commit
-# sees the same load: one 425-event chunk every 0.25 s.
-TRICKLE_RATE = 1700.0  # events/s
-N_BUCKETS = 16
-LOOKUPS_PER_ROUND = 10
+BULK_CHUNKS = 9
+BULK_BATCHES = 3
+# Compaction threshold (ApplyConfig.compact_max_files, delta snapshots
+# per bucket). The default, 8, needs 9 commits on one table before it
+# fires; at ~5 s per micro-batch on a 4-core host that does not fit a
+# run. At 3, the bulk phase's 3 commits stay at it, so the serving
+# phase reads 3 delta snapshots per bucket, and the trickle's first
+# commit crosses it: a background compaction overlaps its second batch.
+COMPACT_MAX_FILES = 3
+TAIL_CHUNK_EVENTS = 105
+# Offered rate of the trickle phase: about a quarter of the bulk phase's
+# throughput at local[4] (~1.7k events/s), fixed so every run sees the
+# same load: one 105-event chunk every 0.25 s.
+TRICKLE_RATE = 420.0  # events/s
+CONV_POOL = 200  # conversations the lookups draw from
+# A fixed subset of __spark_entry__.queries(), small enough for the run
+# budget: operators (aggregates, sessionize), functions (date parts),
+# _spread, and the training-mix chain (sampling, PII redaction, token
+# counts, sequence packing). No query uses plans/.
+QUERIES = ["q_pricing_summary", "q_sessionize", "q_date_parts", "q_training_mix"]
+TABLES = ["events", "orders", "lineitem", "part", "documents"]
 
 
 def note(msg: str) -> None:
@@ -102,14 +107,6 @@ def other_spark_jvms() -> list[int]:
     return out
 
 
-def vm_hwm_mb(pid: int | str) -> float:
-    with open(f"/proc/{pid}/status") as f:
-        for line in f:
-            if line.startswith("VmHWM:"):
-                return int(line.split()[1]) / 1024.0
-    return 0.0
-
-
 def pct(values: list[float], q: float) -> float:
     """Linear-interpolated percentile (q in 0..100)."""
     v = sorted(values)
@@ -121,50 +118,23 @@ def pct(values: list[float], q: float) -> float:
     return v[lo] + (v[hi] - v[lo]) * (k - lo)
 
 
-def host_record(args, n_cpu: int, heap: str, spark) -> dict:
-    mem_total = 0
-    with open("/proc/meminfo") as f:
-        for line in f:
-            if line.startswith("MemTotal:"):
-                mem_total = int(line.split()[1]) // 1024
-    shm = shutil.disk_usage("/dev/shm").free // (1 << 20) if os.path.isdir("/dev/shm") else None
-    import pyarrow
-
-    jvm = spark.sparkContext._jvm
-    return {
-        "nproc": n_cpu,
-        "mem_total_mb": mem_total,
-        "dev_shm_free_mb": shm,
-        "spark": spark.version,
-        "pyarrow": pyarrow.__version__,
-        "java": jvm.java.lang.System.getProperty("java.version"),
-        "master": spark.sparkContext.master,
-        "driver_heap": heap,
-        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
-        "workload": args.workload,
-        "seed": args.seed,
-        "seconds": args.seconds,
-        "trace": args.trace,
-        "offered_rate_events_per_s": TRICKLE_RATE,
-    }
-
-
 # ----------------------------------------------------------------- inputs
 
 
 class Inputs:
-    """The WAL of one (workload, seed): bulk chunks, tail chunks (the
-    trickle publisher's source) and a small warm-up log (one batch)."""
+    """The WAL of one (workload, seed), bulk chunks and tail chunks (the
+    trickle publisher's source), and the analytic tables."""
 
     def __init__(self, workload: str, seed: int):
         spec = WORKLOADS[workload]
-        key = hashlib.md5(repr((spec, WARM, BULK_CHUNKS, TAIL_CHUNK_EVENTS, seed)).encode()).hexdigest()[:10]
+        key = repr((spec, BULK_CHUNKS, TAIL_CHUNK_EVENTS, seed))
+        key = hashlib.md5(key.encode()).hexdigest()[:10]
         self.dir = os.path.join(WORK, "cache", f"{workload}-{seed}-{key}")
         if not os.path.exists(os.path.join(self.dir, "done")):
             self._build(spec, seed)
         self.bulk = sorted(glob.glob(os.path.join(self.dir, "bulk", "*.parquet")))
         self.tail = sorted(glob.glob(os.path.join(self.dir, "tail", "*.parquet")))
-        self.warm = sorted(glob.glob(os.path.join(self.dir, "warm", "*.parquet")))
+        self.tables = os.path.join(self.dir, "tables")
         with open(os.path.join(self.dir, "done")) as f:
             meta = json.load(f)
         self.tail_lsn_max = meta["tail_lsn_max"]
@@ -174,10 +144,13 @@ class Inputs:
 
     def _build(self, spec: LogSpec, seed: int) -> None:
         import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from perfbench.gen import generate, write_chunks, write_tables
 
         shutil.rmtree(self.dir, ignore_errors=True)
         os.makedirs(os.path.dirname(self.dir), exist_ok=True)
-        # keep the cache small: only the newest few logs survive
+        # keep the cache small: only the newest few inputs survive
         old = sorted(glob.glob(os.path.join(WORK, "cache", "*")), key=os.path.getmtime)
         for d in old[:-3]:
             shutil.rmtree(d, ignore_errors=True)
@@ -190,9 +163,7 @@ class Inputs:
         write_chunks(bulk, os.path.join(tmp, "bulk"), BULK_CHUNKS, base)
         n_tail = max(1, tail.num_rows // TAIL_CHUNK_EVENTS)
         paths = write_chunks(tail, os.path.join(tmp, "tail"), n_tail, base + BULK_CHUNKS)
-        write_chunks(generate(seed + 1_000_003, WARM), os.path.join(tmp, "warm"), 4, base)
-        import pyarrow.parquet as pq
-
+        write_tables(seed, os.path.join(tmp, "tables"))
         lsn_max, events = [], []
         for p in paths:
             t = pq.read_table(p, columns=["lsn"])
@@ -210,337 +181,196 @@ class Inputs:
         os.sync()
 
 
-# ----------------------------------------------------------------- stream
-
-
-class Stream:
-    """``readStream -> foreachBatch(apply_batch)`` with the benchmark's
-    own timers around every ``apply_batch`` call."""
-
-    def __init__(self, ctx, src_dir: str, table, ckpt: str, label: str, app_id: str,
-                 available_now: bool, max_files: int | None = None):
-        from audience_behavior_semantic_etl_spark.cdc.apply import ApplyConfig, apply_batch
-        from audience_behavior_semantic_etl_spark.cdc.schema import ENVELOPE_SCHEMA
-
-        self.calls: list[dict] = []  # {label, start, end, m}
-        self.on_call = None  # callback(start) before each apply_batch
-        cfg = ApplyConfig(app_id=app_id)
-
-        def handle(df, batch_id: int) -> None:
-            tag = f"{label}:apply:{batch_id}"
-            ctx.label(tag)
-            start = time.time()
-            if self.on_call is not None:
-                self.on_call(start)
-            m = apply_batch(df, table, batch_id, cfg)
-            self.calls.append({"label": tag, "start": start, "end": time.time(), "m": m})
-
-        reader = ctx.spark.readStream.schema(ENVELOPE_SCHEMA)
-        if max_files:
-            reader = reader.option("maxFilesPerTrigger", max_files)
-        w = reader.parquet(src_dir).writeStream.foreachBatch(handle).option("checkpointLocation", ckpt)
-        if available_now:
-            w = w.trigger(availableNow=True)
-        self.query = w.start()
-
-    def stop(self) -> None:
-        if self.query.isActive:
-            self.query.stop()
-        if self.query.exception() is not None:
-            raise RuntimeError(f"stream failed: {self.query.exception()}")
-
-
-# ----------------------------------------------------------------- context
-
-
-class Ctx:
-    def __init__(self, args):
-        self.trace = bool(args.trace)
-        self.rng = random.Random(args.seed)
-        self.run_dir = os.path.join(WORK, f"run-{os.getpid()}")
-        self.attempted = 0
-        self.failed = 0
-        self.failures: list[str] = []
-        self.spark = None
-
-    def label(self, name: str) -> None:
-        """Tag the calling thread's next Spark jobs (traced runs only)."""
-        if self.trace:
-            self.spark.sparkContext.setJobGroup(name, name)
-
-    def check(self, ok: bool, what: str) -> None:
-        self.attempted += 1
-        if not ok:
-            self.failed += 1
-            self.failures.append(what)
-            print(f"perfbench: CHECK FAILED: {what}", file=sys.stderr)
-
-    def path(self, *p: str) -> str:
-        return os.path.join(self.run_dir, *p)
-
-
-def data_bytes(table) -> int:
-    m = table.manifest()
-    return sum(
-        os.path.getsize(os.path.join(table.root, f)) for fs in m.buckets.values() for f in fs
-    )
-
-
-# ----------------------------------------------------------------- phases
-
-
-def bulk_replay(ctx, chunks: list[str], batches: int, name: str) -> dict:
-    """One availableNow replay of WAL ``chunks`` in ``batches``
-    micro-batches into a fresh table; the clock stops after any pending
-    compaction has been joined."""
-    from audience_behavior_semantic_etl_spark.cdc.apply import join_pending_compaction
-    from audience_behavior_semantic_etl_spark.cdc.table import SnapshotTable
-
-    table = SnapshotTable.create(ctx.spark, ctx.path(name, "table"), n_buckets=N_BUCKETS)
-    t0 = time.time()
-    s = Stream(ctx, os.path.dirname(chunks[0]), table, ctx.path(name, "ckpt"),
-               name, "bench-bulk", True, len(chunks) // batches)
-    s.query.awaitTermination()
-    s.stop()
-    join_pending_compaction(table)
-    wall = time.time() - t0
-    events = sum(c["m"].events for c in s.calls)
-    note(f"{name}: {events} events in {wall:.2f} s; batches "
-         + ", ".join(f"{c['end'] - c['start']:.2f}s {c['m'].phases}" for c in s.calls))
-    return {"table": table, "wall": wall, "events": events, "calls": s.calls, "t0": t0}
-
-
-def bulk_phase(ctx, inp: Inputs, oracle) -> dict:
-    """One timed replay of the bulk WAL (fixed work), checked."""
-    from perfbench.gate import TEXT_COLS, spark_digest
-
-    want = oracle.digest(inp.bulk, TEXT_COLS)
-    rep = bulk_replay(ctx, inp.bulk, BULK_BATCHES, "bulk")
-    ctx.label("bulk:check")
-    for c in rep["calls"]:
-        ctx.check(not c["m"].skipped, f"bulk batch {c['m'].batch_id} skipped")
-    ctx.check(spark_digest(rep["table"].read_final(), TEXT_COLS) == [want], "bulk per-turn text digest")
-    return dict(rep, live_rows=want[0], events_per_s=rep["events"] / rep["wall"])
-
-
-def trickle_phase(ctx, inp: Inputs, oracle, table, seconds: float) -> dict:
-    """Open loop: chunks are due at t0 + i * interval whatever the
-    engine does; freshness is measured from the due time."""
-    from audience_behavior_semantic_etl_spark.cdc.apply import join_pending_compaction
-
-    from perfbench.gate import FULL_COLS, TEXT_COLS, spark_digest
+def make_plan(args, inp: Inputs, oracle, n_cpu: int) -> dict:
+    """Everything the measured process needs: input files, phase lengths
+    and the oracle's expected results."""
+    from perfbench.gate import FULL_COLS, TEXT_COLS
 
     interval = statistics.mean(inp.tail_events) / TRICKLE_RATE
-    n_pub = min(len(inp.tail), max(1, int(seconds / interval) + 1))
-    watched = ctx.path("trickle", "wal")
-    os.makedirs(watched)
-    stage = ctx.path("trickle", "stage")
-    shutil.copytree(os.path.dirname(inp.tail[0]), stage)
-    base_mtime = int(time.time()) - 10_000
-    published: list[tuple[float, float]] = []  # (due, actual)
-    pub_events = [0]
-
-    s = Stream(ctx, watched, table, ctx.path("trickle", "ckpt"), "trickle", "bench-trickle", False)
-    backlog: list[int] = []  # published but not yet applied, at each apply_batch call
-    s.on_call = lambda _start: backlog.append(pub_events[0] - sum(c["m"].events for c in s.calls))
-    t0 = time.time() + 0.5  # let the query reach its first (empty) trigger
-
-    def publish() -> None:
-        for i in range(n_pub):
-            due = t0 + i * interval
-            delay = due - time.time()
-            if delay > 0:
-                time.sleep(delay)
-            name = os.path.basename(inp.tail[i])
-            src = os.path.join(stage, name)
-            os.utime(src, (base_mtime + i, base_mtime + i))
-            os.rename(src, os.path.join(watched, name))
-            published.append((due, time.time()))
-            pub_events[0] += inp.tail_events[i]
-
-    pub = threading.Thread(target=publish, name="perfbench-publisher")
-    pub.start()
-    last_lsn = inp.tail_lsn_max[n_pub - 1]
-    limit = t0 + n_pub * interval + 60
-    while time.time() < limit:
-        if s.calls and s.calls[-1]["m"].lsn_max >= last_lsn:
-            break
-        if s.query.exception() is not None:
-            break
-        time.sleep(0.02)
-    pub.join()
-    s.stop()
-    t_end = s.calls[-1]["end"] if s.calls else time.time()
-    join_pending_compaction(table)
-
-    fresh = []
-    for i in range(n_pub):
-        cover = next((c for c in s.calls if c["m"].lsn_max >= inp.tail_lsn_max[i]), None)
-        ctx.check(cover is not None, f"trickle chunk {i} applied")
-        if cover is not None:
-            fresh.append(cover["end"] - published[i][0])
-    files = inp.bulk + inp.tail[:n_pub]
-    ctx.label("trickle:check")
-    text, full = spark_digest(table.read_final(), TEXT_COLS, FULL_COLS)
-    ctx.check(text == oracle.digest(files, TEXT_COLS), "trickle per-turn text digest")
-    ctx.check(full == oracle.digest(files, FULL_COLS), "trickle full-row digest")
+    per_batch = len(inp.bulk) // BULK_BATCHES
+    # the WAL files each bulk commit has applied
+    commits = [inp.bulk[: k * per_batch] for k in range(1, BULK_BATCHES + 1)]
+    served = inp.bulk
+    live = oracle.live_convs(served)
+    pool = random.Random(args.seed).sample(live, min(len(live), CONV_POOL))
+    hot = [c for c in inp.hot_convs if c in set(live)]
     return {
-        "calls": s.calls, "fresh": fresh, "t0": t0, "t_end": t_end, "files": files,
-        "late": [a - d for d, a in published], "backlog": backlog, "n_pub": n_pub,
+        "workload": args.workload, "seed": args.seed, "trace": args.trace, "n_cpu": n_cpu,
+        "heap": f"{max(2, math.ceil(0.75 * n_cpu))}g",
+        "bulk": inp.bulk, "bulk_events": inp.bulk_events, "bulk_batches": BULK_BATCHES,
+        "compact_max_files": COMPACT_MAX_FILES,
+        "tail": inp.tail, "tail_lsn_max": inp.tail_lsn_max, "tail_events": inp.tail_events,
+        "serving_s": args.seconds, "interval_s": interval,
+        "tables_dir": inp.tables, "queries": QUERIES,
+        "served_text": oracle.digest(served, TEXT_COLS),
+        "served_full": oracle.digest(served, FULL_COLS),
+        # (commit number, digest) for every commit before the last
+        "time_travel": [[k, oracle.digest(files, FULL_COLS)] for k, files in enumerate(commits[:-1], 1)],
+        "pool": pool, "hot": hot,
+        "want_rows": oracle.rows_by_conv(served, pool + hot),
     }
 
 
-def serving_phase(ctx, inp: Inputs, oracle, table, bulk_versions, seconds: float) -> dict:
-    """Reads of the bulk table, whose commit layout does not depend on
-    timing (the trickle's batching does), so read costs compare across
-    runs."""
-    from perfbench.gate import FULL_COLS, spark_digest, spark_rows
+def measure(plan: dict, run_dir: str) -> dict:
+    """Run measure.py in its own process group and return its raw.json."""
+    with open(os.path.join(run_dir, "plan.json"), "w") as f:
+        json.dump(plan, f)
+    env = dict(os.environ)
+    # everything the engine and Spark write stays inside the checkout
+    env.update({
+        "PYTHONPATH": ROOT + os.pathsep + os.environ.get("PYTHONPATH", ""),
+        "SPARK_GRAFT_SCRATCH": os.path.join(run_dir, "scratch"),
+        "SPARK_GRAFT_LOCAL_DIR": os.path.join(run_dir, "local"),
+        "SPARK_GRAFT_DRIVER_MEM": plan["heap"],
+        "TMPDIR": os.path.join(WORK, "tmp"),
+        "JAVA_TOOL_OPTIONS": "-XX:-UsePerfData",  # no /tmp/hsperfdata_* files
+    })
+    for d in ("scratch", "local", "events"):
+        os.makedirs(os.path.join(run_dir, d))
+    child = subprocess.Popen([sys.executable, os.path.join(HERE, "measure.py"), run_dir], env=env,
+                             stdin=subprocess.DEVNULL, stdout=sys.stderr, start_new_session=True)
+    try:
+        child.wait(timeout=max(10.0, DEADLINE_S - (time.time() - T_START)))
+    except subprocess.TimeoutExpired:
+        os.killpg(child.pid, signal.SIGKILL)
+        child.wait()
+        _die(4, "the measured process did not finish in time")
+    finally:
+        # its JVM normally exits with it; make sure nothing of the group
+        # outlives the run, and wait until the group is gone
+        try:
+            os.killpg(child.pid, signal.SIGKILL)
+            for _ in range(100):
+                time.sleep(0.1)
+                os.killpg(child.pid, 0)
+        except ProcessLookupError:
+            pass
+    if child.returncode != 0:
+        _die(5, f"the measured process failed (exit {child.returncode})")
+    with open(os.path.join(run_dir, "raw.json")) as f:
+        return json.load(f)
 
-    # untimed preparation: expected results
-    files = inp.bulk
-    head = table.manifest()
-    # the incremental pull of a consumer that synced after the first
-    # bulk commit, from the last file rewrite on
-    rewrites = [v for v in range(1, head.version + 1) if table.manifest(v).files_removed]
-    since = max([bulk_versions[0]] + rewrites)
-    want_scan = oracle.digest(files, FULL_COLS)
-    tt = [(v, oracle.digest(inp.bulk[: k * (len(inp.bulk) // BULK_BATCHES)], FULL_COLS))
-          for k, v in enumerate(bulk_versions[:-1], start=1)]
-    live = oracle.live_convs(files)
-    rng = ctx.rng
-    conv_pool = rng.sample(live, min(len(live), 400))
-    hot = [c for c in inp.hot_convs if c in set(live)]
-    want_rows = oracle.rows_by_conv(files, conv_pool + hot)
-    # the first lookup and scan of the session run cold; keep them out of the samples
-    table.read_key(conv_pool[0]).collect()
-    spark_digest(table.read_final(), FULL_COLS)
 
-    out = {"lookup_ms": [], "scan_s": [], "changes_s": [], "tt_s": [], "manifest_ms": [],
-           "lookup_spans": [], "lookup_files": []}
-    deadline = time.time() + seconds
-    r = 0
-    # seeded rounds of ops; the phase ends at the deadline, after at least one round
-    while r == 0 or time.time() < deadline:
-        ops = ["key"] * LOOKUPS_PER_ROUND + ["scan", "changes", "tt"]
-        rng.shuffle(ops)
-        for j, op in enumerate(ops):
-            if r > 0 and time.time() >= deadline:
-                break
-            tag = f"serve:{r}:{j}:{op}"
-            ctx.label(tag)
-            if op == "key":
-                conv = rng.choice(hot) if hot and rng.random() < 0.25 else rng.choice(conv_pool)
-                t = time.time()
-                rows = table.read_key(conv).collect()
-                e = time.time()
-                out["lookup_ms"].append((e - t) * 1000)
-                out["lookup_spans"].append((tag, t, e))
-                ctx.check(spark_rows(rows) == want_rows[conv], f"read_key({conv})")
-            elif op == "scan":
-                t = time.perf_counter()
-                (d,) = spark_digest(table.read_final(), FULL_COLS)
-                out["scan_s"].append(time.perf_counter() - t)
-                ctx.check(d == want_scan, "read_final full-row digest")
-            elif op == "changes":
-                t = time.perf_counter()
-                got = (table.read_changes(since)
-                       .select("conv_id", "turn_idx", "_lsn", "_deleted", "text").toArrow())
-                out["changes_s"].append(time.perf_counter() - t)
-                bad = oracle.bad_change_rows(files, got)
-                ctx.check(bad == 0 and (got.num_rows > 0 or since == head.version),
-                          f"read_changes({since}): {got.num_rows} rows, {bad} match no WAL event")
-            else:
-                v, want = tt[rng.randrange(len(tt))]
-                t = time.perf_counter()
-                (d,) = spark_digest(table.read_final(version=v), FULL_COLS)
-                out["tt_s"].append(time.perf_counter() - t)
-                ctx.check(d == want, f"read_final(version={v}) digest")
-        t = time.perf_counter()
-        table.manifest()
-        out["manifest_ms"].append((time.perf_counter() - t) * 1000)
-        r += 1
-    if ctx.trace:
-        ctx.label("serve:files")
-        out["lookup_files"] = [len(table.read_key(c).inputFiles()) for c in conv_pool[:20]]
-        out["scan_files"] = len(table.read_final().inputFiles())
+def check_results(raw: dict, oracle, inp: Inputs) -> list[tuple[bool, str]]:
+    """The checks that need the oracle: the table after the trickle and
+    ``read_changes`` rows against the WAL, query results against
+    ``oracle_sql()``."""
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    from perfbench.gate import FULL_COLS, TEXT_COLS, frame_mismatch
+
+    trickle = raw["trickle"]
+    files = inp.bulk + inp.tail[: trickle["n_pub"]]
+    out = [(trickle["text_digest"] == list(oracle.digest(files, TEXT_COLS)), "trickle per-turn text digest"),
+           (trickle["full_digest"] == list(oracle.digest(files, FULL_COLS)), "trickle full-row digest")]
+    since = raw["serving"]["since"]
+    for p in raw["serving"]["changes_files"]:
+        got = pq.read_table(p)
+        bad = oracle.bad_change_rows(inp.bulk, got)
+        out.append((bad == 0 and got.num_rows > 0,
+                    f"read_changes({since}): {got.num_rows} rows, {bad} match no WAL event"))
+    sql = entry.oracle_sql()
+    for t in TABLES:
+        oracle.con.execute(f"CREATE OR REPLACE VIEW {t} AS "
+                           f"SELECT * FROM read_parquet('{os.path.join(inp.tables, t)}.parquet')")
+    for name, p in raw["queries"]["files"].items():
+        bad = frame_mismatch(pq.read_table(p).to_pandas(), oracle.con.execute(sql[name]).fetchdf())
+        out.append((bad is None, f"{name}: {bad}"))
     return out
 
 
 # ----------------------------------------------------------------- metrics
 
 
-def end_to_end(setup_s, rss_mb, bulk, trickle, serving) -> dict:
+def end_to_end(raw: dict) -> dict:
+    bulk, serving, fresh = raw["bulk"], raw["serving"], raw["trickle"]["fresh"]
     return {
-        "setup_s": (setup_s, "s"),
-        "peak_rss_mb": (rss_mb, "MB"),
-        "apply_events_per_s": (bulk["events_per_s"], "events/s"),
+        "setup_s": (raw["setup_s"], "s"),
+        "peak_rss_mb": (raw["rss_mb"], "MB"),
+        "apply_events_per_s": (bulk["events"] / bulk["wall"], "events/s"),
         "table_bytes_per_live_row": (bulk["table_bytes"] / bulk["live_rows"], "B/row"),
-        "freshness_p50_s": (statistics.median(trickle["fresh"]), "s"),
-        "freshness_p90_s": (pct(trickle["fresh"], 90), "s"),
+        "freshness_p50_s": (statistics.median(fresh), "s"),
+        "freshness_p90_s": (pct(fresh, 90), "s"),
         "lookup_p50_ms": (statistics.median(serving["lookup_ms"]), "ms"),
         "scan_s": (statistics.median(serving["scan_s"]), "s"),
         "changes_s": (statistics.median(serving["changes_s"]), "s"),
+        "queries_total_s": (sum(raw["queries"]["s"].values()), "s"),
     }
 
 
-def per_layer(inp, bulk, trickle, serving, log) -> dict:
-    """Layer figures of the timed phases. ``apply.*`` phase times are
-    means per batch over the bulk and trickle batches."""
+def apply_layer(prefix: str, calls: list[dict], log) -> dict:
+    """``apply.<prefix>.*``: per-batch figures of one regime's
+    ``apply_batch`` calls; phase times are means per batch."""
     from perfbench import eventlog
 
-    tc = trickle["calls"]
-    calls = bulk["calls"] + tc
     ms = [c["m"] for c in calls]
+    walls = [c["end"] - c["start"] for c in calls]
+    jobs = eventlog.attribute(log, calls)
+    out = {
+        "batch_s_p50": (statistics.median(walls), "s"),
+        "batch_s_max": (max(walls), "s"),
+        **{f"{p}_s": (statistics.mean((m["phases"] or {}).get(p, 0.0) for m in ms), "s")
+           for p in ("spool", "stats", "census", "write", "commit", "compact")},
+        "jobs_per_batch": (jobs["jobs_per_batch"], "count"),
+        "in_job_s": (jobs["in_job_s"], "s"),
+        "driver_s": (jobs["driver_s"], "s"),
+        "write_task_skew": (jobs["write_task_skew"], "ratio"),
+        "shuffle_bytes_per_event": (jobs["shuffle_bytes"] / sum(m["events"] for m in ms), "B/event"),
+        "spill_bytes": (jobs["spill_bytes"], "B"),
+        "hot_keys": (sum(m["hot_keys"] for m in ms), "count"),
+        "dedup_dropped": (sum(m["dedup_dropped"] for m in ms), "count"),
+        "udf_s": (jobs["udf_s"] / len(calls), "s"),
+    }
+    return {f"apply.{prefix}.{k}": v for k, v in out.items()}
+
+
+def per_layer(raw: dict, log) -> dict:
+    from perfbench import eventlog
+
+    trickle, serving, table = raw["trickle"], raw["serving"], raw["table"]
+    tc = trickle["calls"]
     gap, prev = 0.0, trickle["t0"]
     for c in tc:
         gap += max(0.0, c["start"] - prev)
         prev = c["end"]
-    phase = {p: statistics.mean((m.phases or {}).get(p, 0.0) for m in ms)
-             for p in ("spool", "stats", "census", "write", "commit", "compact")}
-    jobs = eventlog.attribute(log, calls)
+    bulk_layer = apply_layer("bulk", raw["bulk"]["calls"], log)
     lookups = eventlog.spans(log, serving["lookup_spans"])
-    background = eventlog.owners(log, since=bulk["t0"]).get("site:table.py", (0, 0.0))
-    table = serving["table"]
-    head = table.manifest()
-    manifests = sorted(glob.glob(os.path.join(table.root, "_manifests", "*")), key=os.path.getmtime)
-    data_files = glob.glob(os.path.join(table.root, "data", "**", "*.parquet"), recursive=True)
-    written = sum(os.path.getsize(p) for p in data_files)  # compacted-away files included
-    rewrites = [v for v in range(1, head.version + 1) if table.manifest(v).files_removed]
-    applied_events = inp.bulk_events + sum(inp.tail_events[: trickle["n_pub"]])
+    # from the trickle on, every job the benchmark starts is labelled; the
+    # rest are the engine's background compactions
+    own = eventlog.owners(log, since=trickle["t0"])
+    background = [v for k, v in own.items() if k == "unlabelled" or k.startswith("site:")]
+    q = eventlog.spans_stages(log, raw["queries"]["spans"])
     return {
+        "setup.session_s": (raw["session_s"], "s"),
+        "setup.first_batch_s": (raw["first_batch_s"], "s"),
         "stream.batches": (len(tc), "count"),
-        "stream.events_per_batch_p50": (statistics.median(c["m"].events for c in tc), "events"),
+        "stream.events_per_batch_p50": (statistics.median(c["m"]["events"] for c in tc), "events"),
         "stream.gap_s": (gap, "s"),
         "stream.apply_s": (sum(c["end"] - c["start"] for c in tc), "s"),
         "stream.wall_s": (trickle["t_end"] - trickle["t0"], "s"),
         "stream.generator_late_s_max": (max(trickle["late"]), "s"),
         "stream.backlog_events_max": (max(trickle["backlog"] or [0]), "events"),
-        "apply.batch_s_p50": (statistics.median(c["end"] - c["start"] for c in calls), "s"),
-        "apply.batch_s_max": (max(c["end"] - c["start"] for c in calls), "s"),
-        **{f"apply.{p}_s": (v, "s") for p, v in phase.items()},
-        "apply.jobs_per_batch": (jobs["jobs_per_batch"], "count"),
-        "apply.in_job_s": (jobs["in_job_s"], "s"),
-        "apply.driver_s": (jobs["driver_s"], "s"),
-        "apply.write_task_skew": (jobs["write_task_skew"], "ratio"),
-        "apply.shuffle_bytes_per_event": (jobs["shuffle_bytes"] / sum(m.events for m in ms), "B/event"),
-        "apply.spill_bytes": (jobs["spill_bytes"], "B"),
-        "apply.hot_keys": (sum(m.hot_keys for m in ms), "count"),
-        "apply.dedup_dropped": (sum(m.dedup_dropped for m in ms), "count"),
-        "normalize.udf_s": (jobs["udf_s"] / len(calls), "s"),
-        "table.commits": (head.version, "count"),
-        "table.manifest_bytes_first": (os.path.getsize(manifests[0]), "B"),
-        "table.manifest_bytes_per_commit": (os.path.getsize(manifests[-1]), "B"),
+        **{k: v for k, v in bulk_layer.items() if not k.endswith(".udf_s")},
+        **{k: v for k, v in apply_layer("trickle", tc, log).items() if not k.endswith(".udf_s")},
+        "normalize.udf_s": bulk_layer["apply.bulk.udf_s"],
+        "table.commits": (table["commits"], "count"),
+        "table.manifest_bytes_first": (table["manifest_bytes_first"], "B"),
+        "table.manifest_bytes_per_commit": (table["manifest_bytes_last"], "B"),
         "table.manifest_s": (statistics.median(serving["manifest_ms"]) / 1000, "s"),
-        "table.live_files": (sum(len(f) for f in head.buckets.values()), "count"),
-        "table.files_per_bucket_max": (max(len(f) for f in head.buckets.values()), "count"),
-        "table.bytes_written_per_event": (written / applied_events, "B/event"),
-        "table.compactions": (len(rewrites), "count"),
-        "table.background_jobs": (background[0], "count"),
-        "table.background_job_s": (background[1], "s"),
+        "table.live_files": (serving["live_files"], "count"),
+        "table.files_per_bucket_max": (serving["files_per_bucket_max"], "count"),
+        "table.bytes_written_per_event": (table["bytes_written_per_event"], "B/event"),
+        "table.compactions": (table["compactions"], "count"),
+        "table.background_jobs": (sum(n for n, _ in background), "count"),
+        "table.background_job_s": (sum(t for _, t in background), "s"),
         "table.lookup_jobs": (lookups["jobs_per_span"], "count"),
         "table.lookup_files_scanned_p50": (statistics.median(serving["lookup_files"]), "count"),
         "table.lookup_driver_ms": (lookups["driver_s_p50"] * 1000, "ms"),
         "table.scan_files": (serving["scan_files"], "count"),
+        **{f"query.{n}_s": (s, "s") for n, s in raw["queries"]["s"].items()},
+        "query.small_scan_stages": (q["small_scan_stages"], "count"),
+        "query.stage_skew_max": (q["stage_skew_max"], "ratio"),
     }
 
 
@@ -548,102 +378,49 @@ def per_layer(inp, bulk, trickle, serving, log) -> dict:
 
 
 def run(args) -> int:
+    from perfbench import eventlog
     from perfbench.gate import Oracle
 
     n_cpu = len(os.sched_getaffinity(0))  # nproc
-    heap = f"{max(2, math.ceil(0.75 * n_cpu))}g"
     os.makedirs(os.path.join(WORK, "tmp"), exist_ok=True)
-    ctx = Ctx(args)
-    shutil.rmtree(ctx.run_dir, ignore_errors=True)
-    os.makedirs(ctx.run_dir)
-    # everything the engine and Spark write stays inside the checkout
-    os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
-    os.environ["SPARK_GRAFT_SCRATCH"] = ctx.path("scratch")
-    os.environ["SPARK_GRAFT_LOCAL_DIR"] = ctx.path("local")
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = heap
-    os.environ["TMPDIR"] = os.path.join(WORK, "tmp")
-    os.environ["JAVA_TOOL_OPTIONS"] = "-XX:-UsePerfData"  # no /tmp/hsperfdata_* files
-    for d in ("scratch", "local", "events"):
-        os.makedirs(ctx.path(d))
-
-    inp = Inputs(args.workload, args.seed)
-    inp.warm_page_cache()
+    run_dir = os.path.join(WORK, f"run-{os.getpid()}")
+    shutil.rmtree(run_dir, ignore_errors=True)
+    os.makedirs(run_dir)
     oracle = Oracle()
-    note("inputs ready")
-
-    from audience_behavior_semantic_etl_spark.session import get_spark
-
-    conf = {
-        # a fixed-size heap: no resizing, so GC and peak RSS vary less between runs
-        "spark.driver.extraJavaOptions": f"-Xms{heap} -Djava.io.tmpdir={os.environ['TMPDIR']}",
-        "spark.ui.showConsoleProgress": "false",
-        "spark.sql.warehouse.dir": ctx.path("warehouse"),
-    }
-    if ctx.trace:
-        conf.update({
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": "file://" + ctx.path("events"),
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-        })
-    spark = get_spark(app_name=f"perfbench-{args.workload}", cpus=n_cpu, shuffle_partitions=n_cpu,
-                      extra_conf=conf)
-    ctx.spark = spark
-    gw = spark.sparkContext._gateway
-    jvm_proc = gw.proc
-    record = host_record(args, n_cpu, heap, spark)
     try:
-        try:
-            note("session up")
-            bulk_replay(ctx, inp.warm, 1, "warm")
-            os.sync()
-            setup_s = time.time() - T_START
-            note("warm-up done")
-            bulk = bulk_phase(ctx, inp, oracle)
-            base = bulk["table"]
-            bulk["table_bytes"] = data_bytes(base)
-            snap = {base.manifest(v).snapshot_id: v for v in range(1, base.manifest().version + 1)}
-            bulk_versions = [snap[c["m"].snapshot_id] for c in bulk["calls"]]
-            serving = serving_phase(ctx, inp, oracle, base, bulk_versions, args.seconds * 0.3)
-            serving["table"] = base
-            note(f"serving done: {len(serving['lookup_ms'])} lookups, scans {serving['scan_s']}, "
-                 f"changes {serving['changes_s']}, time travel {serving['tt_s']}")
-            trickle = trickle_phase(ctx, inp, oracle, base, args.seconds * 0.7)
-            note(f"trickle done: {len(trickle['calls'])} batches, "
-                 f"freshness {sorted(round(f, 2) for f in trickle['fresh'])}")
-            rss = vm_hwm_mb("self") + vm_hwm_mb(jvm_proc.pid)
-            metrics = end_to_end(setup_s, rss, bulk, trickle, serving)
-        finally:
-            spark.stop()
-            gw.shutdown()
-            jvm_proc.stdin.close()
-            try:
-                jvm_proc.wait(timeout=60)
-            except subprocess.TimeoutExpired:
-                jvm_proc.kill()
-                jvm_proc.wait()
-            oracle.close()
-        if ctx.trace:
-            from perfbench import eventlog
-
-            log = eventlog.load(glob.glob(ctx.path("events", "*"))[0])
+        inp = Inputs(args.workload, args.seed)
+        inp.warm_page_cache()
+        plan = make_plan(args, inp, oracle, n_cpu)
+        note("inputs and expectations ready")
+        raw = measure(plan, run_dir)
+        checks = check_results(raw, oracle, inp)
+        metrics = end_to_end(raw)
+        if args.trace:
+            log = eventlog.load(glob.glob(os.path.join(run_dir, "events", "*"))[0])
             traced = metrics
-            metrics = per_layer(inp, bulk, trickle, serving, log)
+            metrics = per_layer(raw, log)
             # tracing overhead = these minus the same metrics of an untraced run
-            for k in ("apply_events_per_s", "freshness_p50_s", "lookup_p50_ms", "scan_s"):
+            for k in ("apply_events_per_s", "freshness_p50_s", "lookup_p50_ms", "scan_s", "queries_total_s"):
                 metrics[f"trace.{k}"] = traced[k]
     finally:
-        shutil.rmtree(ctx.run_dir, ignore_errors=True)
+        oracle.close()
+        shutil.rmtree(run_dir, ignore_errors=True)
 
-    record["failures"] = ctx.failures[:20]
+    c = raw["checks"]
+    attempted = c["attempted"] + len(checks)
+    failures = c["failures"] + [what for ok, what in checks if not ok]
+    for what in failures[c["failed"]:]:
+        print(f"perfbench: CHECK FAILED: {what}", file=sys.stderr)
+    record = dict(raw["record"], workload=args.workload, seed=args.seed, seconds=args.seconds,
+                  trace=args.trace, offered_rate_events_per_s=TRICKLE_RATE, failures=failures[:20])
     print(json.dumps({"record": record}))
     print(json.dumps({
-        "correct": ctx.failed == 0,
-        "attempted": ctx.attempted,
-        "failed": ctx.failed,
+        "correct": not failures,
+        "attempted": attempted,
+        "failed": len(failures),
         "metrics": {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()},
     }))
-    return 0 if ctx.failed == 0 else 1
+    return 0 if not failures else 1
 
 
 def main() -> int:
@@ -653,6 +430,8 @@ def main() -> int:
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
+    # a terminated run still stops the measured process (finally blocks)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     if not os.path.isfile(os.path.join(ROOT, ENGINE, "cdc", "apply.py")):
         _die(2, f"engine package {ENGINE}/ not found next to perfbench/; run from a full checkout")
     jvms = other_spark_jvms()

@@ -27,8 +27,8 @@ ROOT = os.path.dirname(HERE)
 sys.path.insert(0, ROOT)
 
 from perfbench import eventlog  # noqa: E402
-from perfbench.gate import FULL_COLS, TEXT_COLS, Oracle  # noqa: E402
-from perfbench.gen import LogSpec, generate, write_chunks  # noqa: E402
+from perfbench.gate import FULL_COLS, TEXT_COLS, Oracle, frame_mismatch  # noqa: E402
+from perfbench.gen import LogSpec, generate, write_chunks, write_tables  # noqa: E402
 
 SMALL = LogSpec(n_convs=60, mean_turns=6, hot_convs=1, hot_updates=40, bulk_events=500)
 
@@ -136,13 +136,31 @@ def test_gate_fails_on_corrupted_expectation(small_wal):
         oracle.close()
 
 
+def test_query_results_gate(tmp_path):
+    """The query check accepts the oracle's own result in another row
+    order and column order, and rejects a changed value or a lost row."""
+    write_tables(3, str(tmp_path))
+    oracle = Oracle()
+    try:
+        oracle.con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+        sql = ("SELECT user_id, count(*) AS n, round(sum(value), 2) AS total "
+               "FROM events GROUP BY user_id")
+        want = oracle.con.execute(sql).fetchdf()
+    finally:
+        oracle.close()
+    got = want.sample(frac=1.0, random_state=1)[["total", "n", "user_id"]]
+    assert frame_mismatch(got, want) is None
+    bad = got.copy()
+    bad.iloc[0, 0] += 0.01
+    assert frame_mismatch(bad, want) is not None
+    assert frame_mismatch(got.iloc[1:], want) is not None
+
+
 def test_eventlog_parser_on_canned_log():
     log = eventlog.load(os.path.join(HERE, "testdata", "canned_eventlog.jsonl"))
 
-    class M:
-        phases = {"spool": 0.0, "stats": 0.45, "census": 0.0, "write": 1.1, "commit": 0.01}
-
-    call = {"label": "t:apply:0", "start": 0.99, "end": 2.55, "m": M}
+    m = {"phases": {"spool": 0.0, "stats": 0.45, "census": 0.0, "write": 1.1, "commit": 0.01}}
+    call = {"label": "t:apply:0", "start": 0.99, "end": 2.55, "m": m}
     a = eventlog.attribute(log, [call])
     assert a["jobs_per_batch"] == 2
     assert a["in_job_s"] == pytest.approx(1.4)
@@ -158,6 +176,10 @@ def test_eventlog_parser_on_canned_log():
     assert o["t:apply"] == (2, pytest.approx(1.4))
     assert o["site:table.py"] == (1, pytest.approx(1.0))
     assert o["serve:key"][0] == 2
+    assert o["unlabelled"] == (1, pytest.approx(0.5))  # no label, no call site
+    q = eventlog.spans_stages(log, [("query:q_x", 4.0, 4.4)])
+    assert q["small_scan_stages"] == 1  # stage 6: a file scan on 1 task
+    assert q["stage_skew_max"] == pytest.approx(3.0)  # stage 7: 0.3 s over a 0.1 s median
 
 
 def test_refuses_without_the_engine(tmp_path):
@@ -204,7 +226,10 @@ def test_traced_run_reports_every_layer_metric():
     for m in _spec()["per_layer"]:
         assert r["metrics"][m["name"]]["unit"] == m["unit"]
     got = r["metrics"]
-    assert got["apply.hot_keys"]["value"] > 0  # the skewed bulk batches take the salted path
+    assert got["apply.bulk.hot_keys"]["value"] > 0  # the skewed bulk batches take the salted path
+    # the trickle's commits cross the compaction threshold
+    assert got["table.compactions"]["value"] > 0
+    assert got["table.background_jobs"]["value"] > 0
     # the trickle's timed wall is apply_batch time plus the gaps between calls
     assert got["stream.apply_s"]["value"] + got["stream.gap_s"]["value"] == pytest.approx(
         got["stream.wall_s"]["value"], rel=1e-6)
